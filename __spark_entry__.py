@@ -728,10 +728,13 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     _, merges = bpe_from_corpus(docs, k=30, max_types=BPE_MAX_TYPES)
     counts = bpe_token_counts(docs, merges)
+    # guard the division like the oracle's CASE WHEN: under ANSI mode (the
+    # Spark 4 default) `div` by zero raises instead of returning NULL
     return (counts.select(
         "doc_id", "n_words", "n_bpe_tokens",
-        F.coalesce(F.expr("n_bpe_tokens * 1000000L div n_words"),
-                   F.lit(0)).cast("long").alias("fertility_micro"))
+        F.when(F.col("n_words") == 0, F.lit(0))
+        .otherwise(F.expr("n_bpe_tokens * 1000000L div n_words"))
+        .cast("long").alias("fertility_micro"))
         .orderBy("doc_id"))
 
 

@@ -9,10 +9,11 @@ hash.
 Semantics contract (reference: phrase/phrase.py:29-119 and
 phrase/phrase_model.py:80-155):
 
-- A phrase compiles into its skipgram occurrence list, distinct-gram set,
-  gram frequency counter, first-occurrence offset per gram, and "early"/
-  "late" gram subsets (grams starting before ``early_threshold``, grams
-  reaching past ``len(phrase) - late_threshold - ngram_size``).
+- A phrase compiles into its skipgram occurrence list and, per distinct
+  gram (numbered by a phrase-local id), its frequency, first-occurrence
+  offset and whether it is "early"/"late" (some occurrence starts before
+  ``early_threshold`` / reaches past
+  ``len(phrase) - late_threshold - ngram_size``).
 - A model registers phrases, spelling variants (resolved back to their main
   phrase on match), distractors (used to reject matches that fit a
   look-alike better) and labels; words of every phrase/variant/distractor
@@ -41,13 +42,15 @@ class CompiledPhrase:
     """One phrase (or variant, or distractor) compiled for matching."""
 
     name: str                    # original phrase string
-    match_text: str              # string grams were computed from (lowered if ignorecase)
     grams: List[Tuple[GramKey, int, int]]          # (key, start, length) occurrences
-    gram_set: Set[GramKey] = field(default_factory=set)
-    gram_freq: Dict[GramKey, int] = field(default_factory=dict)
-    gram_first_offset: Dict[GramKey, int] = field(default_factory=dict)
-    early: Set[GramKey] = field(default_factory=set)
-    late: Set[GramKey] = field(default_factory=set)
+    # phrase-local dense gram ids: distinct keys in sorted order, local id =
+    # position.  The sweep's per-visit state indexes the flat loc_* tables
+    # below instead of hashing gram keys into dicts/sets.
+    local_id: Dict[GramKey, int] = field(default_factory=dict)
+    loc_freq: List[int] = field(default_factory=list)     # occurrences
+    loc_first: List[int] = field(default_factory=list)    # first start
+    loc_early: List[bool] = field(default_factory=list)   # may open a span
+    loc_late: List[bool] = field(default_factory=list)    # may close a span
     num_grams: int = 0
     late_threshold: int = 0
     label: Union[None, str, List[str]] = None
@@ -57,20 +60,9 @@ class CompiledPhrase:
     metadata: dict = field(default_factory=dict)
     # plain field (not a property): read once per (gram x phrase) probe
     needs_offset_prune: bool = False
-    # sorted int64 key array for vectorized membership tests (None when the
-    # model uses string keys, i.e. ngram_size > 3)
+    # the local-id order as an int64 array for vectorized membership tests
+    # (None when the model uses string keys, i.e. ngram_size > 3)
     sorted_keys_np: object = None
-    # flat per-local-id tables aligned with sorted_keys_np (local id =
-    # position in sorted_keys_np): the sweep's per-visit state then indexes
-    # lists instead of hashing gram keys into dicts/sets
-    loc_freq: Optional[List[int]] = None
-    loc_first: Optional[List[int]] = None
-    loc_early: Optional[List[bool]] = None
-    loc_late: Optional[List[bool]] = None
-
-    @property
-    def has_max_start(self) -> bool:
-        return self.max_start_offset >= 0
 
     def refresh_prune_flag(self) -> None:
         self.needs_offset_prune = (
@@ -83,20 +75,22 @@ def compile_phrase(phrase: Union[str, dict], config: SearchConfig) -> CompiledPh
     name = props["phrase"]
     match_text = name.lower() if config.ignorecase else name
     grams = keyed_skipgrams(match_text, config.ngram_size, config.skip_size)
-    gram_first: Dict[GramKey, int] = {}
+    freq = Counter(g[0] for g in grams)
+    first: Dict[GramKey, int] = {}
     for key, start, _length in grams:
-        if key not in gram_first:
-            gram_first[key] = start
+        first.setdefault(key, start)
+    early = {g[0] for g in grams if g[1] < config.early_threshold}
     late_cut = len(name) - config.late_threshold - config.ngram_size
+    late = {g[0] for g in grams if g[1] + g[2] > late_cut}
+    keys = sorted(freq)
     cp = CompiledPhrase(
         name=name,
-        match_text=match_text,
         grams=grams,
-        gram_set={g[0] for g in grams},
-        gram_freq=dict(Counter(g[0] for g in grams)),
-        gram_first_offset=gram_first,
-        early={g[0] for g in grams if g[1] < config.early_threshold},
-        late={g[0] for g in grams if g[1] + g[2] > late_cut},
+        local_id={k: i for i, k in enumerate(keys)},
+        loc_freq=[freq[k] for k in keys],
+        loc_first=[first[k] for k in keys],
+        loc_early=[k in early for k in keys],
+        loc_late=[k in late for k in keys],
         num_grams=len(grams),
         late_threshold=late_cut,
         label=props.get("label"),
@@ -108,15 +102,10 @@ def compile_phrase(phrase: Union[str, dict], config: SearchConfig) -> CompiledPh
     if isinstance(props.get("max_end_offset"), int) and props["max_end_offset"] >= 0:
         cp.max_end_offset = props["max_end_offset"]
     cp.refresh_prune_flag()
-    if all(isinstance(k, int) for k in cp.gram_set):
+    if all(isinstance(k, int) for k in keys):
         import numpy as np
 
-        skeys = sorted(cp.gram_set)
-        cp.sorted_keys_np = np.array(skeys, dtype=np.int64)
-        cp.loc_freq = [cp.gram_freq[k] for k in skeys]
-        cp.loc_first = [cp.gram_first_offset[k] for k in skeys]
-        cp.loc_early = [k in cp.early for k in skeys]
-        cp.loc_late = [k in cp.late for k in skeys]
+        cp.sorted_keys_np = np.array(keys, dtype=np.int64)
     return cp
 
 
@@ -140,9 +129,6 @@ class CompiledModel:
     first_word_in_phrase: Dict[str, Dict[str, int]]
     phrase_type: Dict[str, Set[str]]
     scanner: GramScanner
-
-    def lookup(self, phrase_string: str) -> CompiledPhrase:
-        return self.phrases.get(phrase_string) or self.variants[phrase_string]
 
     def fingerprint(self) -> str:
         """Deterministic version stamp for lineage / resume-drift detection."""

@@ -145,26 +145,67 @@ def _label_list(label) -> Optional[List[str]]:
     return list(label)
 
 
-def attach_extracted_text(df: DataFrame, html_col: str = "html",
-                          out_col: str = "text",
-                          extractor=None) -> DataFrame:
-    """Derive the extracted-text column from raw payload bytes
-    (Arrow-batched); ``extractor`` defaults to extract_html (see
-    match_documents for the alternatives)."""
-    extract_fn = extractor if extractor is not None else extract_html
-
-    @F.pandas_udf(T.StringType())
-    def _extract(html: pd.Series) -> pd.Series:
-        return html.map(extract_fn)
-
-    return df.withColumn(out_col, _extract(F.col(html_col)))
-
-
 def salt_by_url(df: DataFrame, num_partitions: int,
                 url_col: str = "url") -> DataFrame:
     """Spread documents uniformly over partitions by url hash — defuses the
     giant-document straggler tail without changing per-document results."""
     return df.repartition(num_partitions, F.xxhash64(F.col(url_col)))
+
+
+def _map_matches(df: DataFrame, model, match_fn, ignorecase: bool,
+                 url_col: str, text_col: str, html_col: Optional[str],
+                 extractor, metrics_acc=None) -> DataFrame:
+    """The mapInPandas body both matchers share: broadcast ``model``, then
+    per Arrow batch extract NULL ``text_col`` values from ``html_col``,
+    match every non-empty text with ``match_fn(text, model)`` and assemble
+    the MATCH_SCHEMA frame.  ``metrics_acc`` (a _MetricsParam accumulator)
+    receives one [docs, chars, matches, wall_ms] row per partition."""
+    bc_model = df.sparkSession.sparkContext.broadcast(model)
+    use_html = html_col is not None
+    extract_fn = extractor if extractor is not None else extract_html
+    cols = [url_col, text_col] + ([html_col] if use_html else [])
+
+    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        compiled = bc_model.value
+        t0 = time.monotonic()
+        docs = chars = matched = 0
+        for pdf in batches:
+            out = {c: [] for c in _MATCH_COLUMNS}
+            urls = pdf[url_col].tolist()
+            texts = pdf[text_col].tolist()
+            htmls = pdf[html_col].tolist() if use_html else None
+            for ri, url in enumerate(urls):
+                text = texts[ri]
+                if text is None and use_html:
+                    text = extract_fn(htmls[ri])
+                if not text:
+                    continue
+                docs += 1
+                chars += len(text)
+                for m in match_fn(text, compiled):
+                    out["url"].append(url)
+                    out["phrase"].append(m.phrase)
+                    out["variant"].append(m.variant)
+                    out["string"].append(m.string)
+                    out["offset"].append(m.offset)
+                    out["end"].append(m.end)
+                    out["label"].append(_label_list(m.label))
+                    out["ignorecase"].append(ignorecase)
+                    out["char_match"].append(m.char_match)
+                    out["ngram_match"].append(m.ngram_match)
+                    out["levenshtein_similarity"].append(m.levenshtein_similarity)
+            matched += len(out["url"])
+            if not out["url"]:
+                continue  # pandas 2.x types empty frames float64, which
+                # Arrow cannot convert to the list<string> label column
+            yield pd.DataFrame(out)
+        if metrics_acc is not None:
+            ctx = TaskContext.get()
+            pid = ctx.partitionId() if ctx else -1
+            wall_ms = int((time.monotonic() - t0) * 1000)
+            metrics_acc.add({pid: [docs, chars, matched, wall_ms]})
+
+    return df.select(*cols).mapInPandas(process, MATCH_SCHEMA)
 
 
 def match_documents(df: DataFrame, model: CompiledModel,
@@ -187,59 +228,13 @@ def match_documents(df: DataFrame, model: CompiledModel,
     """
     from fuzzy_search_spark.matcher import find_matches_chunked
 
-    sc = df.sparkSession.sparkContext
-    bc_model = sc.broadcast(model)
-    ignorecase = model.config.ignorecase
-    use_html = html_col is not None
-    extract_fn = extractor if extractor is not None else extract_html
-    cols = [url_col, text_col] + ([html_col] if use_html else [])
+    def match(text: str, compiled: CompiledModel):
+        if chunk_chars and len(text) > chunk_chars:
+            return find_matches_chunked(text, compiled, chunk_chars)
+        return find_matches(text, compiled)
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        compiled = bc_model.value
-        t0 = time.monotonic()
-        docs = chars = matched = 0
-        for pdf in batches:
-            out = {c: [] for c in _MATCH_COLUMNS}
-            urls = pdf[url_col].tolist()
-            texts = pdf[text_col].tolist()
-            htmls = pdf[html_col].tolist() if use_html else None
-            for ri, url in enumerate(urls):
-                text = texts[ri]
-                if text is None and use_html:
-                    text = extract_fn(htmls[ri])
-                if not text:
-                    continue
-                docs += 1
-                chars += len(text)
-                if chunk_chars and len(text) > chunk_chars:
-                    doc_matches = find_matches_chunked(text, compiled,
-                                                       chunk_chars)
-                else:
-                    doc_matches = find_matches(text, compiled)
-                for m in doc_matches:
-                    matched += 1
-                    out["url"].append(url)
-                    out["phrase"].append(m.phrase)
-                    out["variant"].append(m.variant)
-                    out["string"].append(m.string)
-                    out["offset"].append(m.offset)
-                    out["end"].append(m.end)
-                    out["label"].append(_label_list(m.label))
-                    out["ignorecase"].append(ignorecase)
-                    out["char_match"].append(m.char_match)
-                    out["ngram_match"].append(m.ngram_match)
-                    out["levenshtein_similarity"].append(m.levenshtein_similarity)
-            if not out["url"]:
-                continue  # pandas 2.x types empty frames float64, which
-                # Arrow cannot convert to the list<string> label column
-            yield pd.DataFrame(out)
-        if metrics_acc is not None:
-            ctx = TaskContext.get()
-            pid = ctx.partitionId() if ctx else -1
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            metrics_acc.add({pid: [docs, chars, matched, wall_ms]})
-
-    return df.select(*cols).mapInPandas(process, MATCH_SCHEMA)
+    return _map_matches(df, model, match, model.config.ignorecase, url_col,
+                        text_col, html_col, extractor, metrics_acc)
 
 
 def match_documents_tokens(df: DataFrame, token_model,
@@ -247,48 +242,13 @@ def match_documents_tokens(df: DataFrame, token_model,
                            html_col: Optional[str] = None,
                            extractor=None) -> DataFrame:
     """Token-level fuzzy match over a documents DataFrame (the fast,
-    slightly-less-exhaustive pipeline).  Same broadcast + mapInPandas shape
+    slightly-less-exhaustive pipeline).  Same broadcast + mapInPandas body
     as match_documents; char/ngram scores are NULL by design (the token
     searcher computes only the Levenshtein ratio)."""
     from fuzzy_search_spark.token_matcher import find_token_matches
 
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast(token_model)
-    use_html = html_col is not None
-    extract_fn = extractor if extractor is not None else extract_html
-    cols = [url_col, text_col] + ([html_col] if use_html else [])
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        compiled = bc.value
-        for pdf in batches:
-            out = {c: [] for c in _MATCH_COLUMNS}
-            urls = pdf[url_col].tolist()
-            texts = pdf[text_col].tolist()
-            htmls = pdf[html_col].tolist() if use_html else None
-            for ri, url in enumerate(urls):
-                text = texts[ri]
-                if text is None and use_html:
-                    text = extract_fn(htmls[ri])
-                if not text:
-                    continue
-                for m in find_token_matches(text, compiled):
-                    out["url"].append(url)
-                    out["phrase"].append(m.phrase)
-                    out["variant"].append(m.variant)
-                    out["string"].append(m.string)
-                    out["offset"].append(m.offset)
-                    out["end"].append(m.end)
-                    out["label"].append(_label_list(m.label))
-                    out["ignorecase"].append(False)
-                    out["char_match"].append(m.char_match)
-                    out["ngram_match"].append(m.ngram_match)
-                    out["levenshtein_similarity"].append(
-                        m.levenshtein_similarity)
-            if not out["url"]:
-                continue  # see match_documents: empty-frame dtype trap
-            yield pd.DataFrame(out)
-
-    return df.select(*cols).mapInPandas(process, MATCH_SCHEMA)
+    return _map_matches(df, token_model, find_token_matches, False, url_col,
+                        text_col, html_col, extractor)
 
 
 def run_extraction_job(spark: SparkSession, input_path: str, output_path: str,

@@ -311,6 +311,9 @@ def compile_token_model(phrases: Sequence[Union[str, dict]],
 #: (token_searcher.py:921) — folded into the compile-time fan-out rows
 _MAX_PARTIAL_START_OFFSET = 5
 
+#: fields per _build_chain_fanout row
+_FANOUT_ROW_WIDTH = 9
+
 
 def _build_chain_fanout(tm: TokenModel) -> dict:
     """ptoken -> tuple of (phrase_id, phrase, start_ok, len(phrase.name),
@@ -858,7 +861,10 @@ def _chain_partial_phrases(token_matches: List[TokenMatch],
     max_char_gap = tm.max_char_gap
     max_length_variance = tm.max_length_variance
     fanout = tm.chain_fanout
-    if fanout is None:                  # models from older pickles
+    # models unpickled from older code may carry no fan-out, or rows of
+    # an older width: rebuild, since every row is read by position below
+    rows = next(iter(fanout.values()), None) if fanout is not None else None
+    if fanout is None or (rows and len(rows[0]) != _FANOUT_ROW_WIDTH):
         fanout = tm.chain_fanout = _build_chain_fanout(tm)
     buckets: List[Optional[List[_PartialPhrase]]] = [None] * len(tm.phrases)
     candidates: Dict[str, List[_PartialPhrase]] = {}

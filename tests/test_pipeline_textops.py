@@ -305,6 +305,33 @@ def test_bpe_token_counts_matches_python(spark):
             round(want / len(words), 6))
 
 
+def test_bpe_token_counts_query_zero_word_doc_under_ansi(spark, tmp_path):
+    """q_bpe_token_counts divides by n_words: a document without words
+    must get fertility 0 (the oracle's CASE WHEN), not a divide-by-zero
+    error, under ANSI mode (the Spark 4 default)."""
+    import __spark_entry__ as entry
+
+    spark.createDataFrame(
+        [(1, "low lower lowest low"), (2, ""), (3, "  \t "), (4, None),
+         (5, "new newer newest")],
+        "doc_id long, text string",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        rows = {r.doc_id: r for r in
+                entry.q_bpe_token_counts(spark, str(tmp_path)).collect()}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    for doc_id in (2, 3, 4):
+        assert rows[doc_id].n_words == 0
+        assert rows[doc_id].fertility_micro == 0
+    for doc_id in (1, 5):
+        r = rows[doc_id]
+        assert r.n_words > 0
+        assert r.fertility_micro == r.n_bpe_tokens * 1_000_000 // r.n_words
+
+
 # ---------------------------------------------------------------------------
 # plan-shape guards (scale regression pins for the round-3 ops)
 # ---------------------------------------------------------------------------
