@@ -11,8 +11,6 @@ import random
 from collections import Counter
 from typing import Dict, List, Optional, Tuple
 
-import pytest
-
 from fuzzy_search_spark.matcher import _Candidate, _sweep_candidates_local
 from fuzzy_search_spark.model import compile_model
 
@@ -177,26 +175,37 @@ def _spec_sweep(sp, grams, text, thr, mlv, gap_limit):
     return candidates
 
 
-@pytest.mark.parametrize("ngram_size,skip_size", [(2, 2), (4, 1)],
-                         ids=["int_keys", "str_keys"])
-def test_local_sweep_equals_spec(ngram_size, skip_size):
-    model = compile_model(
+# (ngram_size, skip_size): n <= 3 packs gram keys into ints, n >= 4 keeps
+# them as strings; both reach the one product sweep.
+_KEY_CONFIGS = {"int_keys": (2, 2), "str_keys": (4, 1)}
+
+_VOCAB = ["den", "Jan", "Januarii", "1725", "den .. Januarii 1725",
+          "dn Januarii  1725", "JanJanJan", "den den den", "17251725",
+          "PRAESIDE", "PRSIDE", "tst case", "case test", "xx"]
+
+
+def _model(ngram_size, skip_size):
+    return compile_model(
         ["den .. Januarii 1725", "PRAESIDE", "test case"],
         {"char_match_threshold": 0.5, "levenshtein_threshold": 0.5,
          "max_length_variance": 3, "ngram_size": ngram_size,
          "skip_size": skip_size},
     )
+
+
+def _check_local_sweep_equals_spec(ngram_size, skip_size, seed):
+    """Sweep 400 random texts with the product sweep and the spec; return
+    how many candidates were compared."""
+    model = _model(ngram_size, skip_size)
     cfg = model.config
     gap_limit = cfg.ngram_size + cfg.skip_size + 1
     key_type = int if ngram_size <= 3 else str
     specs = [_SpecPhrase(cp, cfg) for cp in model.phrases.values()]
-    rng = random.Random(99)
-    vocab = ["den", "Jan", "Januarii", "1725", "den .. Januarii 1725",
-             "dn Januarii  1725", "JanJanJan", "den den den", "17251725",
-             "PRAESIDE", "PRSIDE", "tst case", "case test", "xx"]
+    rng = random.Random(seed)
     checked = 0
     for _ in range(400):
-        text = " ".join(rng.choice(vocab) for _ in range(rng.randint(2, 40)))
+        text = " ".join(rng.choice(_VOCAB)
+                        for _ in range(rng.randint(2, 40)))
         hits = model.scanner.scan(text)
         for sp in specs:
             cp = sp.cp
@@ -214,4 +223,39 @@ def test_local_sweep_equals_spec(ngram_size, skip_size):
                    [(c.start, c.end, c.string, c.skip_count_overlap)
                     for c in spec], text
             checked += len(spec)
-    assert checked > 100
+    return checked
+
+
+def test_inlined_sweep_equals_spec():
+    """The product sweep equals the _Partial spec, candidate for
+    candidate, for int and string gram keys."""
+    for name, (ngram_size, skip_size) in _KEY_CONFIGS.items():
+        assert _check_local_sweep_equals_spec(ngram_size, skip_size,
+                                              seed=99) > 100, name
+
+
+def test_local_id_sweep_equals_generic():
+    """The compiled phrase-local tables hold exactly the generic dict/set
+    gram tables (keyed by gram, as the reference keeps them), and the
+    sweep over local ids agrees with the dict/set spec on a second set of
+    random texts."""
+    for name, (ngram_size, skip_size) in _KEY_CONFIGS.items():
+        model = _model(ngram_size, skip_size)
+        for cp in model.phrases.values():
+            sp = _SpecPhrase(cp, model.config)
+            assert set(cp.local_id) == sp.gram_set, (name, cp.name)
+            assert sorted(cp.local_id.values()) == \
+                list(range(len(sp.gram_set)))
+            for key, lid in cp.local_id.items():
+                assert cp.loc_freq[lid] == sp.gram_freq[key]
+                assert cp.loc_first[lid] == sp.gram_first_offset[key]
+                assert cp.loc_early[lid] == (key in sp.early)
+                assert cp.loc_late[lid] == (key in sp.late)
+            if ngram_size <= 3:
+                # the vectorized accumulator maps hits to local ids by
+                # position in the sorted key array
+                assert [cp.local_id[k] for k in
+                        cp.sorted_keys_np.tolist()] == \
+                    list(range(len(cp.local_id)))
+        assert _check_local_sweep_equals_spec(ngram_size, skip_size,
+                                              seed=1234) > 100, name
